@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * and the weight walk compiles to a nested CASE WHEN over the
   * cumulative bounds — the whole assignment stays inside whole-stage
   * codegen and never shuffles by itself. Downstream co-location with a
-  * shard-local sink is then one `repartition(n, $"shard")`.
+  * shard-local sink is then one exchange ([[Sharding.partitionByShard]]).
   */
 final case class ShardSpec(weights: Seq[Int]) {
   require(weights.nonEmpty && weights.forall(_ > 0), "weights must be positive")
@@ -56,10 +56,22 @@ object Sharding {
   }
 
   /** Co-locate rows with their shard for a shard-local sink: one
-    * shuffle keyed by shard, `partitionsPerShard` splits each shard's
-    * stream for write parallelism (the reference's
+    * shuffle that gives every shard its own `partitionsPerShard`
+    * partitions, for write parallelism (the reference's
     * `--loader-task-executor` reducer fan-out, ClickhouseHdfsLoader.java:142-154).
+    * The partition id is computed, not hashed: shard `s` owns
+    * partitions `s·k until (s+1)·k`, and a row picks one of them by
+    * `pmod(xxhash64(wire_row), k)`, so `df` needs a `wire_row` column
+    * when k > 1. A hash of the shard id instead would put several
+    * shards in one partition and leave others empty, and could never
+    * split one shard over `k` partitions.
     */
-  def partitionByShard(df: DataFrame, spec: ShardSpec, partitionsPerShard: Int = 1): DataFrame =
-    df.repartition(spec.weights.size * partitionsPerShard, col("shard"))
+  def partitionByShard(df: DataFrame, spec: ShardSpec, partitionsPerShard: Int = 1): DataFrame = {
+    val k = partitionsPerShard
+    require(k >= 1, s"partitionsPerShard must be >= 1, got $k")
+    val id =
+      if (k == 1) col("shard")
+      else col("shard") * k + pmod(xxhash64(col("wire_row")), lit(k.toLong)).cast("int")
+    df.repartitionById(spec.weights.size * k, id)
+  }
 }

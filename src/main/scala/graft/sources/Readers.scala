@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.config.{InputFormat, LoaderConfig}
+import graft.operators.TransformStage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -11,10 +12,13 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * harness tables.
   *
   * Small-file combining: the reference packs text files into ≤256 MiB
-  * splits (`CombineTextInputFormat`, ClickhouseHdfsLoader.java:161);
-  * Spark's equivalent knobs are `spark.sql.files.maxPartitionBytes` +
-  * `spark.sql.files.openCostInBytes`, set per-read below — built-in
-  * packing, no custom InputFormat needed.
+  * splits by their real bytes (`CombineTextInputFormat`,
+  * ClickhouseHdfsLoader.java:161). Spark's equivalent knobs are
+  * `spark.sql.files.maxPartitionBytes` + `spark.sql.files.openCostInBytes`,
+  * and Spark reads them from the session conf when an action plans its
+  * scan, not when the frame is built. [[splitScope]] sets them around a
+  * load's own actions and restores them after, so a load never changes
+  * the split sizing of later, unrelated queries in the same session.
   */
 object Readers {
 
@@ -22,24 +26,25 @@ object Readers {
     * Reads as raw lines + split (limit -1 keeps trailing empties —
     * `TextRecordDecoder.java:31-46` semantics), NOT the csv reader:
     * the reference does no quoting/escaping, so csv quote handling
-    * would silently alter rows.
+    * would silently alter rows. Building the frame changes no session
+    * setting; its scan is split by the session conf of the action that
+    * runs it (a load's [[splitScope]]). The max-arity inference scan
+    * below, an action of its own, runs inside the scope.
     */
   def readText(spark: SparkSession, cfg: LoaderConfig,
       numFields: Option[Int] = None): DataFrame = {
-    applySplitConf(spark, cfg)
     val lines = spark.read.text(cfg.exportDir)
-    val sep = java.util.regex.Pattern.quote(cfg.fieldsTerminatedBy)
-    val fields = split(col("value"), sep, -1)
+    val fields = TransformStage.tokenize(col("value"), cfg.fieldsTerminatedBy)
     // column count: explicit (from the catalog — TargetSchema — in a
     // real load) or inferred as the MAX arity over the data. Sampling
     // one arbitrary line would silently truncate wider rows AND make
     // the schema depend on file listing order; max-arity is
     // deterministic, and narrower rows surface as nulls for the arity
     // validation (op #10) instead of disappearing.
-    val n = numFields.getOrElse(
+    val n = numFields.getOrElse(splitScope(spark, cfg)(
       lines.select(max(size(fields))).collect()
         .headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
-        .getOrElse(0))
+        .getOrElse(0)))
     // get() (not getItem): rows narrower than the declared arity yield
     // nulls for the arity validation (op #10) instead of an ANSI
     // out-of-bounds error killing the whole load
@@ -97,10 +102,33 @@ object Readers {
     case InputFormat.Parquet => readParquet(spark, cfg.exportDir)
   }
 
-  private def applySplitConf(spark: SparkSession, cfg: LoaderConfig): Unit = {
-    spark.conf.set("spark.sql.files.maxPartitionBytes", cfg.inputSplitMaxBytes.toString)
-    // open cost makes many small files pack into one task, the
-    // CombineTextInputFormat behavior
-    spark.conf.set("spark.sql.files.openCostInBytes", (4 * 1024 * 1024).toString)
+  private val MaxPartitionBytes = "spark.sql.files.maxPartitionBytes"
+  private val OpenCostInBytes = "spark.sql.files.openCostInBytes"
+
+  /** Per-file open cost inside [[splitScope]]: about 0, so files pack
+    * by their real bytes and splits come out at about input / cores
+    * (capped by `--input-split-max-bytes`). Not exactly 0: an input of
+    * fewer bytes than cores would then get a split size of 0, which
+    * Spark's file splitter cannot step by ("step cannot be 0").
+    */
+  val SplitOpenCostBytes: Long = 1L
+
+  /** Runs `body` — the actions of one load — with the load's text split
+    * sizing: `maxPartitionBytes` = `cfg.inputSplitMaxBytes` and an
+    * open cost of [[SplitOpenCostBytes]]. The session's previous values
+    * (or their absence) are restored after, also when `body` throws.
+    * The settings are session-wide while `body` runs, so concurrent
+    * actions on the same session see them too.
+    */
+  def splitScope[T](spark: SparkSession, cfg: LoaderConfig)(body: => T): T = {
+    val set = spark.conf.getAll
+    val saved = Seq(MaxPartitionBytes, OpenCostInBytes).map(k => k -> set.get(k))
+    spark.conf.set(MaxPartitionBytes, cfg.inputSplitMaxBytes)
+    spark.conf.set(OpenCostInBytes, SplitOpenCostBytes)
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 }

@@ -18,13 +18,16 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"unexpected shuffle:\n$p")
   }
 
-  test("shard co-location is exactly one hash exchange") {
+  test("shard co-location is exactly one exchange on the computed shard partition id") {
     val df = Sharding.partitionByShard(
       Sharding.assign(Tables(spark, sf).customer, "c_name", ShardSpec(Seq(1, 2, 1))),
       ShardSpec(Seq(1, 2, 1)))
     val p = plan(df)
     assert("Exchange".r.findAllIn(p).size == 1, s"expected 1 exchange:\n$p")
-    assert(p.contains("hashpartitioning(shard"), s"expected shard partitioning:\n$p")
+    // the partition id is the shard id itself (k = 1), passed through
+    // unhashed — not hashpartitioning(shard, n), which co-locates shards
+    assert(p.contains("shufflepartitionidpassthrough(direct_shuffle_partition_id(shard#") &&
+      !p.contains("hashpartitioning"), s"expected shard-id partitioning:\n$p")
   }
 
   test("q24 carries no window at all: total fans back through a bounded aggregate") {

@@ -1,7 +1,9 @@
 package graft
 
-import graft.config.LoaderConfig
+import graft.config.{LoaderConfig, WireFormat}
 import graft.operators.{Sharding, ShardSpec, TransformStage}
+import java.util.regex.Pattern
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class TransformStageSpec extends SparkSpec {
@@ -9,7 +11,7 @@ class TransformStageSpec extends SparkSpec {
 
   private val cfg = LoaderConfig()
 
-  private def one(c: org.apache.spark.sql.Column): String = {
+  private def one(c: Column): String = {
     import spark.implicits._
     Seq(1).toDF("x").select(c.as("r")).collect()(0).getString(0)
   }
@@ -32,6 +34,33 @@ class TransformStageSpec extends SparkSpec {
     assert(one(normalizeField(lit("a\tb"), isStringCol = true, cfg)) == "a b")
     // the reference's own unit-test row (TextRecordDecoderTest.java:27)
     assert(one(normalizeField(lit("弹\t幕\\"), isStringCol = true, cfg)) == "弹 幕/")
+
+    // parity with the translate / regexp_replace paths sanitize used to
+    // take, and with the plain cascade, over both wire separators
+    def oldSanitize(c: Column, cf: LoaderConfig): Column = {
+      val sep = cf.clickhouseFormat.separator
+      if (sep.length == 1 && cf.replaceChar.length == 1)
+        translate(c, sep + "\\", cf.replaceChar.replace('\\', '/') + "/")
+      else
+        regexp_replace(regexp_replace(c, Pattern.quote(sep),
+          java.util.regex.Matcher.quoteReplacement(cf.replaceChar)), "\\\\", "/")
+    }
+    import spark.implicits._
+    val values = Seq("a\tb", "a,b", "a\\b", "\t\\\t", ",\\,", "x\\\\y", "弹\t幕\\", "网,络",
+      "\uD83D\uDE00\t\uD83D\uDE00\\", "\uD83D\uDE00,", "", "\t", "\\")
+    for {
+      fmt <- Seq(WireFormat.TabSeparated, WireFormat.CSV)
+      repl <- Seq(" ", "\\", "/", "<\\>", "网", "\uD83D\uDE00", "")
+    } {
+      val cf = cfg.copy(clickhouseFormat = fmt, replaceChar = repl)
+      val got = values.toDF("v").select(sanitize($"v", cf), oldSanitize($"v", cf)).collect()
+      values.zip(got).foreach { case (v, r) =>
+        val expected = v.replace(fmt.separator, repl).replace("\\", "/")
+        assert(r.getString(0) == expected && r.getString(1) == expected,
+          s"sanitize(${fmt.name}, replaceChar '$repl') of '$v': new '${r.getString(0)}', " +
+            s"old '${r.getString(1)}', expected '$expected'")
+      }
+    }
   }
 
   test("tokenize keeps trailing empty fields (TextRecordDecoder semantics)") {
@@ -41,6 +70,22 @@ class TransformStageSpec extends SparkSpec {
       .select(tokenize(col("line"), "|").as("f"))
       .collect()(0).getSeq[String](0)
     assert(fields == Seq("a", "b", "", "d", ""))
+
+    // every separator splits exactly like its Pattern.quote form, and a
+    // single character takes String.split's no-regex form
+    for (sep <- Seq("|", ",", "\t", ".", "$", "^", "\\", "a", "网", "||", "::")) {
+      val lines = Seq(s"x${sep}y$sep${sep}z$sep", "", sep, sep * 3, "plain", s"弹${sep.head}幕",
+        s"${sep.head}a$sep$sep")
+      val got = lines.toDF("line")
+        .select(tokenize(col("line"), sep), split(col("line"), Pattern.quote(sep), -1))
+        .collect()
+      lines.zip(got).foreach { case (l, r) =>
+        val expected = l.split(Pattern.quote(sep), -1).toSeq
+        assert(r.getSeq[String](0) == expected && r.getSeq[String](1) == expected,
+          s"sep '$sep' line '$l': ${r.getSeq[String](0)} vs $expected")
+      }
+      if (sep.length == 1) assert(splitRegex(sep).length <= 2, s"sep '$sep' → ${splitRegex(sep)}")
+    }
   }
 
   test("excludeFields drops by 0-based position and keeps order") {
@@ -114,6 +159,25 @@ class TransformStageSpec extends SparkSpec {
         spec.bounds.indexWhere(idx < _)
       }
       assert(r.getInt(1) == expected, s"key ${r.getString(0)}")
+    }
+  }
+
+  test("partitionByShard gives every shard its own k partitions") {
+    import spark.implicits._
+    val rows = (0 until 2000).map(i => s"row-$i").toDF("wire_row")
+    for (weights <- Seq(Seq(1, 2, 1), Seq(1, 1)); k <- Seq(1, 2)) {
+      val spec = ShardSpec(weights)
+      val sharded = Sharding.partitionByShard(Sharding.assign(rows, "wire_row", spec), spec, k)
+      assert(sharded.rdd.getNumPartitions == weights.size * k)
+      val layout = sharded.select("shard").rdd
+        .mapPartitionsWithIndex((p, it) => it.map(r => (p, r.getInt(0))))
+        .distinct().collect().toSeq
+      val shardsOf = layout.groupMap(_._1)(_._2)
+      assert(shardsOf.values.forall(_.size == 1),
+        s"weights $weights, k $k: a partition holds several shards: $shardsOf")
+      val partsOf = layout.groupMap(_._2)(_._1)
+      assert(partsOf.keySet == weights.indices.toSet && partsOf.values.forall(_.size == k),
+        s"weights $weights, k $k: shard → partitions $partsOf")
     }
   }
 }
